@@ -6,10 +6,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+DRIVER_HEAP_FRAC = 0.4     # of physical memory
+DRIVER_HEAP_CAP_MB = 16 * 1024
+
+
+def driver_memory() -> str:
+    """The ``spark.driver.memory`` value: ``SPARK_DRIVER_MEM`` when set,
+    else 40% of physical memory in MiB, capped at ``16g``.
+
+    A local-mode driver hosts every executor thread, so its heap is the
+    engine's whole working set; G1 grows it lazily towards the cap, and a
+    cap near the machine's RAM ends in a kernel OOM kill of the JVM.
+    """
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1 << 20)
+    heap_mb = int(phys_mb * DRIVER_HEAP_FRAC)
+    return "16g" if heap_mb >= DRIVER_HEAP_CAP_MB else f"{heap_mb}m"
+
 
 def get_spark(app: str = "medical_ocr_pipeline_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """Get or create the engine's SparkSession.
+
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 when unset) and
+    ``shuffle_partitions`` to the master's core count (at least 8).  The
+    driver heap (``spark.driver.memory``) defaults to 40% of physical
+    memory, never more than ``16g``; a set ``SPARK_DRIVER_MEM`` overrides
+    it unchanged.  See ``driver_memory``.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -35,7 +62,7 @@ def get_spark(app: str = "medical_ocr_pipeline_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
     )
