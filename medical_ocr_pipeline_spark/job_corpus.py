@@ -120,19 +120,15 @@ def near_dup_pairs(docs):
     return ngram_jaccard_pairs(docs, join_hint="shuffle_hash")
 
 
-def run_pipeline(spark, args, out: str, tag: str = "RESULT") -> None:
-    """One full pass of the curation pipeline writing under `out`.
-    `tag` labels the printed summary line ("RESULT" for the real run,
-    "WARMUP" for a --jit-warmup priming pass)."""
+def run_pipeline(spark, args, out: str) -> None:
+    """One full pass of the curation pipeline writing under `out`."""
     from medical_ocr_pipeline_spark.pipeline import write_stage
 
     t0 = time.time()
 
-    prefix = "" if tag == "RESULT" else f"{tag}_"
-
     def phase(name: str, since: float) -> float:
         now = time.time()
-        print(f"{prefix}PHASE {name} secs={now - since:.1f}", flush=True)
+        print(f"PHASE {name} secs={now - since:.1f}", flush=True)
         return now
 
     docs = spark.read.parquet(args.input)
@@ -212,7 +208,7 @@ def run_pipeline(spark, args, out: str, tag: str = "RESULT") -> None:
     n_pairs = spark.read.parquet(f"{out}/dup_pairs").count()
     dt = time.time() - t0
     print(
-        f"{tag} docs={n} kept={kept} dropped={n - kept} "
+        f"RESULT docs={n} kept={kept} dropped={n - kept} "
         f"dup_pairs={n_pairs} secs={dt:.1f}{extra}"
     )
 
@@ -235,31 +231,11 @@ def main() -> None:
                          "duplicated W-word spans removed from the kept "
                          "docs, first occurrence preserved (Lee-et-al "
                          "substring dedup rewrite)")
-    ap.add_argument("--jit-warmup", action="store_true",
-                    help="benchmarking only: run the full pipeline once "
-                         "into <out>/_warmup (summary line tagged WARMUP) "
-                         "before the timed pass, so the RESULT line "
-                         "measures steady-state throughput.  A fresh JVM "
-                         "executes a query's generated code interpreted/"
-                         "C1 until the JIT compiles it — measured ~3x CPU "
-                         "on this job's heavy stages, constant per JVM, "
-                         "amortized to noise on any production-length "
-                         "run but dominant on a minutes-long benchmark "
-                         "leg.  The warm pass uses the same input and "
-                         "plans (only the output path differs), which is "
-                         "exactly what transfers the compiled code.")
     args = ap.parse_args()
 
     from medical_ocr_pipeline_spark.session import get_spark
 
     spark = get_spark(app=f"corpus:{args.run_id}", master=args.master)
-    if args.jit_warmup:
-        run_pipeline(spark, args, f"{args.out}/_warmup", tag="WARMUP")
-        # drop every block the warmup pass persist()ed (shingle index,
-        # span word frame, ...): correctness-neutral (LRU-evictable
-        # either way) but the stale blocks add memory pressure to the
-        # very measurement the flag exists to stabilize
-        spark.catalog.clearCache()
     run_pipeline(spark, args, args.out)
     spark.stop()
 

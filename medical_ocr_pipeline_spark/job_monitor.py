@@ -6,7 +6,6 @@ the fourth runtime surface next to job.py (extraction), job_corpus.py
         medical_ocr_pipeline_spark/job_monitor.py \
         --input /root/testdata/sf0.01/documents.parquet \
         --out /tmp/monitor_run [--master local[32]] [--resume]
-        [--parallel-stages 4]
 
 A production pipeline runs this job on every corpus snapshot and diffs
 the outputs run-over-run; every frame it writes is an oracle-checked
@@ -125,18 +124,11 @@ def run_monitors(spark, args, out: str) -> None:
     # serial floors back-to-back — the measured difference is ~2x wall
     # clock at 32 cores (BENCH.md, job_monitor scaling run).  Results
     # are unaffected: stages share nothing but the read-only cached
-    # frame and write to disjoint paths (checksum-pinned by
-    # scripts/bench_scaling_monitor.py across sizes AND trials).
-    # --parallel-stages 1 restores strictly sequential PHASE output.
-    # getattr: callers that build a bare Namespace (tests) default to 4
-    workers = max(1, getattr(args, "parallel_stages", 4))
-    if workers == 1:
-        for item in STAGES:
-            run_stage(item)
-    else:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            # list() re-raises the first stage failure, if any
-            list(pool.map(run_stage, STAGES))
+    # frame and write to disjoint paths (tests/test_job_monitor.py pins
+    # every stage row-identical to its registry query).
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        # list() re-raises the first stage failure, if any
+        list(pool.map(run_stage, STAGES))
 
     t_sum = time.time()
     chi2 = spark.read.parquet(f"{out}/monitor_chi2")
@@ -203,10 +195,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--master", default="local[32]")
     ap.add_argument("--run-id", default="monitor_run")
-    ap.add_argument("--parallel-stages", type=int, default=4,
-                    help="concurrent monitor stages (independent Spark "
-                         "jobs over the shared cached input; 1 = strictly "
-                         "sequential)")
     ap.add_argument("--resume", action="store_true",
                     help="skip monitors whose _SUCCESS marker exists")
     args = ap.parse_args()

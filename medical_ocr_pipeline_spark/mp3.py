@@ -131,7 +131,10 @@ def mp3_info(payload: bytes) -> dict:
     duration_ms, kbps_mean, kbps_min, kbps_max, vbr, id3_bytes}.
     Raises ValueError when no coherent frame chain exists (so the media
     path's per-row catch costs one row, not the task)."""
-    id3_bytes, frames = _walk(payload)
+    return _summary(*_walk(payload))
+
+
+def _summary(id3_bytes: int, frames: list) -> dict:
     kbps = [f[0] for f in frames]
     sr = frames[0][1]
     return {
@@ -153,9 +156,9 @@ def mp3_container_features(payload: bytes) -> list[float]:
     conventions as mp4.py's container features): duration, rate,
     channels, layer, frame count, bitrate stats, VBR flag, an 8-point
     bitrate-over-time profile."""
-    info = mp3_info(payload)
-    _, frames = _walk(payload)
-    kbps = [f[0] for f in frames] or [0]
+    id3_bytes, frames = _walk(payload)
+    info = _summary(id3_bytes, frames)
+    kbps = [f[0] for f in frames]
     prof = []
     for i in range(8):
         seg = kbps[i * len(kbps) // 8:(i + 1) * len(kbps) // 8] or [0]

@@ -18,7 +18,7 @@ Scale design (the part the reference never had):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -184,14 +184,6 @@ def repartition_by_conv(df: DataFrame, n: int, salt_buckets: int = 0) -> DataFra
             n, F.col("conv_id"), F.pmod(F.hash("turn_idx"), F.lit(salt_buckets))
         )
     return df.repartition(n, F.col("conv_id"))
-
-
-def ordered_turns(df: DataFrame) -> DataFrame:
-    """Stable turn ordering invariant: Window over (conv_id) ordered by
-    turn_idx gives every turn its in-conversation position regardless of
-    physical row order."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_rank", F.row_number().over(w))
 
 
 # single-reduce-task collect_list state (bytes) above which assembly
@@ -455,20 +447,6 @@ def resume_or_compute(spark, path: str, compute) -> DataFrame:
     if stage_is_complete(spark, path):
         return spark.read.parquet(path)
     return compute()
-
-
-def conversation_digest_md(conversations: DataFrame) -> DataFrame:
-    """S10 golden-digest sink (01_qa_pipeline_evaluation cell 32:46-84):
-    per-conversation markdown digest rows; concatenate the `md` column for
-    a fixture-style single-file export."""
-    return conversations.select(
-        "conv_id",
-        F.concat(
-            F.lit("## "), F.col("conv_id"),
-            F.lit(" ("), F.col("n_turns"), F.lit(" turns)\n\n"),
-            F.col("conv_text"), F.lit("\n"),
-        ).alias("md"),
-    ).orderBy("conv_id")
 
 
 def extract_blocks_table(df: DataFrame) -> DataFrame:

@@ -1,6 +1,6 @@
 """QA / verifier operators as queries (SURVEY.md §2 M5): coverage
 histogram (A9), budget depletion (W8), positional baseline join (J4),
-content-drop trend (A13), CER/WER (F15), deep merge (A7).
+content-drop trend (A13), deep merge (A7).
 """
 
 from __future__ import annotations
@@ -174,64 +174,6 @@ def a13_content_trend(spark, sf_dir):
         )
         .orderBy("user_id")
     )
-
-
-_CERWER_SCHEMA = T.StructType([
-    T.StructField("doc_a", T.LongType()),
-    T.StructField("doc_b", T.LongType()),
-    T.StructField("cer", T.DoubleType()),
-    T.StructField("wer", T.DoubleType()),
-    T.StructField("unigram_overlap", T.DoubleType()),
-])
-
-
-def f15_cer_wer(spark, sf_dir):
-    """F15 CER/WER/unigram overlap (qa_pipeline_evaluator.py:490-509)
-    between deterministically paired documents (i, i+250), via a grouped
-    Arrow batch.
-
-    RETIRED from the registry in round 5 (VERDICT r04 item #5): the
-    difflib-ratio semantics are not SQL-expressible, and every metric
-    here now has an exact-oracle twin over the SAME pairing —
-    qa_edit_distance (true Levenshtein CER), qa_wer_exact (word-level
-    WER via the Catalyst DP fold), qa_rouge_overlap (unigram overlap).
-    The difflib parity itself stays unit-tested (tests/test_core.py)
-    and this function remains importable as a diagnostic."""
-    import pandas as pd
-
-    from medical_ocr_pipeline_spark.core.merge import cer, unigram_overlap, wer
-
-    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    a = docs.where(F.col("doc_id") < 250).select(
-        F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
-    )
-    b = docs.where(F.col("doc_id") >= 250).select(
-        (F.col("doc_id") - 250).alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("text").alias("text_b"),
-    )
-    pairs = a.join(b, "doc_a")
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_a": pdf["doc_a"],
-                "doc_b": pdf["doc_b"],
-                "cer": [
-                    round(cer(x, y), 6)
-                    for x, y in zip(pdf["text_a"], pdf["text_b"])
-                ],
-                "wer": [
-                    round(wer(x, y), 6)
-                    for x, y in zip(pdf["text_a"], pdf["text_b"])
-                ],
-                "unigram_overlap": [
-                    round(unigram_overlap(x, y), 6)
-                    for x, y in zip(pdf["text_a"], pdf["text_b"])
-                ],
-            })
-
-    return pairs.mapInPandas(run, schema=_CERWER_SCHEMA).orderBy("doc_a")
 
 
 _MERGE_SCHEMA = T.StructType([
@@ -483,9 +425,9 @@ def j7_layout_preservation(spark, sf_dir):
 )
 def qa_edit_distance(spark, sf_dir):
     """True Levenshtein edit distance between the deterministically
-    paired documents (i, i+250) — the exact-metric twin of f15's
+    paired documents (i, i+250) — the exact-metric twin of core.merge.cer's
     difflib-ratio CER (reference qa_pipeline_evaluator.py:490-509): both
-    engines run the classic unit-cost DP natively, so unlike f15 this
+    engines run the classic unit-cost DP natively, so unlike difflib this
     carries a full cross-engine oracle.  cer_ppm = distance / reference
     length in exact integer ppm.
 
@@ -572,9 +514,10 @@ def qa_rouge_overlap(spark, sf_dir):
     intersection — sum over grams of least(count_a, count_b) — i.e.
     Lin's ROUGE-n and the per-n term of BLEU's modified precision.
     Extraction-QA analogue of the reference's similarity scoring
-    (qa_pipeline_evaluator.py:490-509): where f15 uses difflib ratio and
-    qa_edit_distance uses Levenshtein, this is the n-gram-level recall
-    metric used to score extracted text against a gold reference.
+    (qa_pipeline_evaluator.py:490-509): where core.merge uses difflib
+    ratio and qa_edit_distance uses Levenshtein, this is the
+    n-gram-level recall metric used to score extracted text against a
+    gold reference.
 
     100 TB shape: bigrams are built ARRAY-SIDE from the words array
     (transform over slice — no window, no self-join, same trick as the
@@ -637,8 +580,8 @@ def qa_rouge_overlap(spark, sf_dir):
 # --- exact word-level WER -----------------------------------------------------
 # qa_edit_distance is CHARACTER-level (both engines have a native
 # levenshtein); word error rate needs edit distance over WORD
-# sequences, which neither engine has natively — f15 approximates it
-# with difflib and stays rows-only.  This query computes the exact
+# sequences, which neither engine has natively — core.merge.wer
+# approximates it with difflib.  This query computes the exact
 # word-level Levenshtein distance IN PURE SQL on both sides via the
 # prefix-min reformulation of the DP row recurrence:
 #

@@ -275,8 +275,10 @@ def _ranked_by_lang(d):
     the optimizer does not reuse the exchange (observed under
     job_monitor's persisted-input plan: per-row _pid assignments
     diverged between the two subtrees and the stitched ranks were
-    silently wrong — caught by bench_scaling_monitor's cross-size
-    checksum, round 5).  A plain persist would NOT be enough: a lost
+    silently wrong; tests/test_job_monitor.py pins the job's gini/KS/MW
+    stages row-identical to their registry queries, and
+    tests/test_parallelism_invariance.py pins the rank across shuffle
+    partition counts).  A plain persist would NOT be enough: a lost
     cache block recomputes under fresh boundaries and corrupts ranks
     silently, whereas the severed-lineage checkpoint fails fast.  The
     materialized projection is the 3-column (lang, x, doc_id) order

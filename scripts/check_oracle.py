@@ -92,7 +92,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    spark = get_spark(app="check_oracle", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app="check_oracle", shuffle_partitions=8)
     qs = e.queries()
     oracles = e.oracle_sql()
 

@@ -10,7 +10,7 @@ from medical_ocr_pipeline_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app="tests", shuffle_partitions=8)
     yield s
     s.stop()
 

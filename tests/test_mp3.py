@@ -68,6 +68,16 @@ def test_features_shape_and_dispatch():
     assert real_decode_features("audio", wav) != feats
 
 
+def test_features_walk_frame_chain_once(monkeypatch):
+    from medical_ocr_pipeline_spark import mp3
+
+    calls = []
+    walk = mp3._walk
+    monkeypatch.setattr(mp3, "_walk", lambda pl: calls.append(1) or walk(pl))
+    mp3.mp3_container_features(encode_mp3_skeleton(16, [96, 320]))
+    assert len(calls) == 1
+
+
 def test_garbage_raises_value_error():
     with pytest.raises(ValueError):
         mp3_info(b"not an mpeg stream at all" * 10)

@@ -393,7 +393,9 @@ def test_fanout_keeps_local_parallelism(spark):
     out = fanout(df, "doc_id")
     out.collect()
     n = out.rdd.getNumPartitions()
-    assert n >= 4, n  # local[8] session, shuffle.partitions=8
+    # shuffle.partitions=8; AQE coalesces toward the session's core count
+    # (local[$SPARK_GRAFT_CPUS]), so this needs a session of >= 4 cores
+    assert n >= 4, n
 
 
 def test_corr_doc_stats_single_scan_partial_agg(spark):
