@@ -64,10 +64,15 @@ def deduplicate(blocks: list[dict],
             if inter / (union if union > IOU_EPS else IOU_EPS) < iou_thr:
                 continue
             # SequenceMatcher.ratio() <= 2*min(len)/(len_a+len_b): skip the
-            # quadratic match when the length bound already rules out >= thr
+            # quadratic match when the length bound already rules out >= thr.
+            # Identical texts need no match at all: their bound is 1.0 and
+            # so is their ratio, at every length (autojunk only drops
+            # popular characters from the index, and the longest match
+            # found starts on the diagonal and extends over them), so
+            # ``tl == kl`` decides the pair exactly as difflib would.
             denom = ltl + lkl
             bound = 2.0 * (ltl if ltl < lkl else lkl) / (denom if denom else 1)
-            if bound >= sim_thr and fuzz_ratio(tl, kl) >= sim_thr:
+            if bound >= sim_thr and (tl == kl or fuzz_ratio(tl, kl) >= sim_thr):
                 dup = True
                 break
         if not dup:

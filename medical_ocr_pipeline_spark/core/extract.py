@@ -4,7 +4,7 @@
 This function is the single source of truth for per-turn semantics: the
 golden oracle (medical_ocr_pipeline_spark.oracle) calls it single-process,
 and the Spark pipeline (medical_ocr_pipeline_spark.pipeline) calls it
-inside mapInPandas over Arrow batches — so "per-turn text equality under
+inside mapInArrow over Arrow batches — so "per-turn text equality under
 stable turn ordering" holds by construction, and pytest verifies that
 Spark's partitioning/ordering/skew machinery preserves it.
 

@@ -48,6 +48,22 @@ def _merge(group: list[Block], x_sort: bool) -> Block:
     }
 
 
+def _merge_one(b: Block) -> Block:
+    """``_merge([b], x_sort)`` without the sort, the generator sum and
+    ``union_bbox`` — most line and paragraph groups hold one block.  The
+    confidence is ``(0 + c) / 1`` because ``sum`` starts from int 0 (so
+    an int becomes a float and -0.0 becomes 0.0); the bbox is a fresh
+    4-list, as ``union_bbox`` builds."""
+    text = b["text"]
+    bb = b["bbox"]
+    return {
+        "text": text.strip() if text else "",
+        "confidence": (0 + b.get("confidence", 1.0)) / 1,
+        "bbox": [bb[0], bb[1], bb[2], bb[3]],
+        "source": "+".join(sorted({s for s in _SRC_SPLIT.split(b["source"]) if s})),
+    }
+
+
 def group_lines(blocks: list[Block], line_gap: float = LINE_JOIN_PX) -> list[Block]:
     """A1: merge word/fragment blocks into line blocks."""
     if not blocks:
@@ -62,7 +78,7 @@ def group_lines(blocks: list[Block], line_gap: float = LINE_JOIN_PX) -> list[Blo
             rows.append(cur)
             cur = [b]
     rows.append(cur)
-    return [_merge(row, x_sort=True) for row in rows]
+    return [_merge_one(r[0]) if len(r) == 1 else _merge(r, x_sort=True) for r in rows]
 
 
 def regroup_paragraphs(lines: list[Block], para_gap: float = PARA_JOIN_PX) -> list[Block]:
@@ -78,7 +94,7 @@ def regroup_paragraphs(lines: list[Block], para_gap: float = PARA_JOIN_PX) -> li
             paras.append(cur)
             cur = [ln]
     paras.append(cur)
-    return [_merge(p, x_sort=False) for p in paras]
+    return [_merge_one(p[0]) if len(p) == 1 else _merge(p, x_sort=False) for p in paras]
 
 
 def regroup_lines(blocks: list[Block], line_gap: float = LINE_JOIN_PX,

@@ -7,7 +7,10 @@ functions over the transcript `text` payload.  Four payload families
 mirror the engine-input diversity (FIXTURES.md §1):
 
   1. HTML-ish        -> boilerplate strip via a DOM walk with
-                        jusText/Readability-style link-density scoring
+                        jusText/Readability-style link-density scoring;
+                        payloads in a strict tag-soup subset are
+                        tokenized by one regex pass, the rest by the
+                        stdlib HTMLParser (see _MainContentParser)
   2. layout-blocks   -> "x0,y0,x1,y1,conf,source|text" lines (bbox path)
   3. JSON-fenced     -> fence strip + light repair + parse (F3)
   4. plain text      -> line split + synthetic stacked bboxes (F21)
@@ -48,6 +51,43 @@ _BLOCK_ELEMS = {"p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "td",
 _LINK_DENSITY_MAX = 0.5
 _MIN_BLOCK_CHARS = 3
 _WS_RE = re.compile(r"\s+")
+
+# The fast-path grammar: a subset of markup that HTMLParser tokenizes
+# into exactly these events.  Tokens (one capture group is set per
+# alternative, so ``lastindex`` names the kind):
+#   1  text without '<' or '&' (no charrefs to convert)
+#   2  start tag: ASCII name, double-quoted attribute values without
+#      '<' or '&', no '/>'
+#   3  end tag: ASCII name
+#   4+ a raw-text element (script/style, and title/textarea on Python
+#      versions whose HTMLParser reads those raw too) as one unit with
+#      a body free of '<' and '&' — HTMLParser reads their body as
+#      text, so a generic start tag must never match them
+# Whitespace inside tags is the ASCII set that ends a tag name in
+# HTMLParser.  Comments, declarations, '<?', '&' and self-closing tags
+# fall outside it.  Every quantifier is possessive and the guard runs
+# with fullmatch, so a rejected payload costs one linear scan.
+_RAW_TEXT_ELEMS = tuple(HTMLParser.CDATA_CONTENT_ELEMENTS) + tuple(
+    getattr(HTMLParser, "RCDATA_CONTENT_ELEMENTS", ()))
+_TAG_WS = r"[ \t\n\r\f]"
+_TAG_END = rf'(?:{_TAG_WS}++[a-zA-Z_:][-a-zA-Z0-9_:.]*+="[^"<&]*+")*+{_TAG_WS}*+>'
+
+
+def _html_token(g: str) -> str:
+    """The token alternation; ``g`` opens each token's group — "(" for
+    the tokenizer, "(?:" for the guard (Python 3.11's re raises
+    SystemError on a capturing group inside a possessive repeat)."""
+    raw = "|".join(_RAW_TEXT_ELEMS)
+    return "|".join(
+        [rf"{g}[^<&]++)",
+         rf"<(?!(?i:{raw})[ \t\n\r\f>]){g}[a-zA-Z][a-zA-Z0-9]*+){_TAG_END}",
+         rf"</{g}[a-zA-Z][a-zA-Z0-9]*+){_TAG_WS}*+>"]
+        + [rf"<(?i:{e}){_TAG_END}{g}[^<&]*+)</(?i:{e}){_TAG_WS}*+>"
+           for e in _RAW_TEXT_ELEMS])
+
+
+_HTML_TOKEN_RE = re.compile(_html_token("("))
+_HTML_GUARD_RE = re.compile(rf"(?:{_html_token('(?:')})*+")
 
 
 class _MainContentParser(HTMLParser):
@@ -135,6 +175,32 @@ class _MainContentParser(HTMLParser):
         super().close()
         self._flush()
 
+    def feed_guarded(self, payload: str) -> bool:
+        """Parse a whole payload with one regex pass, calling the same
+        handlers ``feed`` + ``close`` would, when it lies in the fast-path
+        grammar above; return False, with nothing parsed, when it does
+        not.  Source positions are not tracked (``getpos`` stays at the
+        start), so only the text fields of ``blocks`` are meaningful."""
+        if _HTML_GUARD_RE.fullmatch(payload) is None:
+            return False
+        start, end, data = self.handle_starttag, self.handle_endtag, self.handle_data
+        for m in _HTML_TOKEN_RE.finditer(payload):
+            kind = m.lastindex
+            if kind == 1:
+                data(m[1])
+            elif kind == 2:
+                start(m[2].lower(), [])
+            elif kind == 3:
+                end(m[3].lower())
+            else:
+                tag = _RAW_TEXT_ELEMS[kind - 4]
+                start(tag, [])
+                if m[kind]:
+                    data(m[kind])
+                end(tag)
+        self._flush()
+        return True
+
 
 def _stacked_blocks(lines: list[str], source: str, conf: float,
                     page_h: float = PAGE_H) -> list[dict]:
@@ -181,13 +247,20 @@ def _line_anchored_blocks(pairs: list[tuple[int, str]], total_lines: int,
 
 
 def parse_html(payload: str) -> list[dict]:
-    """Boilerplate-stripped main-content blocks with link-density gating."""
+    """Boilerplate-stripped main-content blocks with link-density gating.
+
+    A payload in the fast-path grammar (plain tags with double-quoted
+    attributes, text without '<' or '&', script/style bodies without
+    tags) is tokenized by ``feed_guarded``; anything else falls back to
+    HTMLParser's ``feed``.  Both drive the same handlers, so the blocks
+    are the same either way."""
     p = _MainContentParser()
-    try:
-        p.feed(payload)
-        p.close()
-    except Exception:
-        pass
+    if not p.feed_guarded(payload):
+        try:
+            p.feed(payload)
+            p.close()
+        except Exception:
+            pass
     kept = []
     for text, chars, link_chars, *_pos in p.blocks:
         density = link_chars / chars if chars else 1.0

@@ -3,7 +3,7 @@
 Usage:
     spark-submit --py-files dist/medical_ocr_pipeline_spark.zip \
         medical_ocr_pipeline_spark/job.py \
-        --n-convs 1000 --out /tmp/run1 [--master local[32]] [--resume]
+        --n-convs 1000 --out /tmp/run1 [--master local[N]] [--resume]
 
 Runs: synthesize (or read) transcripts -> per-turn extraction ->
 stage sink + per-partition metrics sink + conversation-level assembly.

@@ -5,7 +5,7 @@ extraction.
     spark-submit --py-files dist/medical_ocr_pipeline_spark.zip \
         medical_ocr_pipeline_spark/job_corpus.py \
         --input /root/testdata/sf0.01/documents.parquet \
-        --out /tmp/corpus_run [--master local[32]]
+        --out /tmp/corpus_run [--master local[N]]
 
 Writes:
   <out>/docs_curated/   one row per document: gate verdict with
@@ -218,7 +218,7 @@ def main() -> None:
     ap.add_argument("--input", required=True,
                     help="documents parquet (doc_id, text, lang, source, ...)")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--master", default="local[32]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--run-id", default="corpus_run")
     ap.add_argument("--line-dedup", action="store_true",
                     help="also write <out>/docs_rewritten: C4-style "

@@ -5,7 +5,7 @@ the fourth runtime surface next to job.py (extraction), job_corpus.py
     spark-submit --py-files dist/medical_ocr_pipeline_spark.zip \
         medical_ocr_pipeline_spark/job_monitor.py \
         --input /root/testdata/sf0.01/documents.parquet \
-        --out /tmp/monitor_run [--master local[32]] [--resume]
+        --out /tmp/monitor_run [--master local[N]] [--resume]
 
 A production pipeline runs this job on every corpus snapshot and diffs
 the outputs run-over-run; every frame it writes is an oracle-checked
@@ -193,7 +193,7 @@ def main() -> None:
     ap.add_argument("--input", required=True,
                     help="documents parquet (doc_id, text, lang, source)")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--master", default="local[32]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--run-id", default="monitor_run")
     ap.add_argument("--resume", action="store_true",
                     help="skip monitors whose _SUCCESS marker exists")

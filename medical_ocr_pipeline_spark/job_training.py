@@ -5,7 +5,7 @@ pack, shard.
     spark-submit --py-files dist/medical_ocr_pipeline_spark.zip \
         medical_ocr_pipeline_spark/job_training.py \
         --input /root/testdata/sf0.01/documents.parquet \
-        --out /tmp/train_run [--master local[32]] [--resume]
+        --out /tmp/train_run [--master local[N]] [--resume]
 
 Stages (each written with a _SUCCESS marker; --resume skips each stage
 INDEPENDENTLY when its marker exists, and the packed stage always reads
@@ -200,7 +200,7 @@ def main() -> None:
     ap.add_argument("--input", required=True,
                     help="documents parquet (doc_id, text, lang, source)")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--master", default="local[32]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--run-id", default="train_run")
     ap.add_argument("--resume", action="store_true",
                     help="skip stages whose _SUCCESS marker exists")

@@ -26,19 +26,27 @@ def driver_memory() -> str:
     return "16g" if heap_mb >= DRIVER_HEAP_CAP_MB else f"{heap_mb}m"
 
 
+def default_master() -> str:
+    """The master ``get_spark`` uses when given none: ``local[N]`` with
+    ``N`` from ``SPARK_GRAFT_CPUS`` when set, else the number of CPUs
+    this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(app: str = "medical_ocr_pipeline_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Get or create the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 when unset) and
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one slot
+    per usable CPU when that is unset (see ``default_master``), and
     ``shuffle_partitions`` to the master's core count (at least 8).  The
     driver heap (``spark.driver.memory``) defaults to 40% of physical
     memory, never more than ``16g``; a set ``SPARK_DRIVER_MEM`` overrides
     it unchanged.  See ``driver_memory``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or default_master()
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         shuffle_partitions = 32 if n == "*" else max(8, int(n))

@@ -2,11 +2,18 @@
 deterministic, and must respect basic invariants for ARBITRARY payloads
 (10^12 real-world turns contain everything)."""
 
+import time
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from medical_ocr_pipeline_spark.core.extract import extract_turn
-from medical_ocr_pipeline_spark.core.parse import detect_variant, parse_payload
+from medical_ocr_pipeline_spark.core.parse import (
+    _HTML_GUARD_RE,
+    _MainContentParser,
+    detect_variant,
+    parse_payload,
+)
 from medical_ocr_pipeline_spark.core.textnorm import (
     apply_dictionary,
     apply_fuzzy,
@@ -130,3 +137,74 @@ def test_dedup_idempotent_and_ordered(blocks):
     # output is a subset of the input blocks (no mutation/merge in J1)
     ids = {id(b) for b in blocks}
     assert all(id(b) in ids for b in once)
+
+
+# --- the guarded one-pass HTML tokenizer vs HTMLParser ---------------------
+# Tag soup from the fast-path grammar's alphabet: nested and mismatched
+# tags in mixed case, attributes, script/style units (some holding tags,
+# which the guard must reject) and multi-line text.
+
+_TAG_NAMES = st.sampled_from(
+    ["p", "div", "a", "A", "span", "li", "h1", "td", "DIV", "br", "b", "x1"] * 3
+    + ["nav", "footer", "scripts", "styles", "script", "style"])
+_soup_text = st.text(alphabet="ab c\n\t>.:", max_size=24)
+_attr = st.tuples(st.sampled_from([" ", "\n", "\t  "]),
+                  st.sampled_from(["class", "href", "data-x", "id"]),
+                  st.text(alphabet="ab />\n=", max_size=6))
+_start_tag = st.builds(
+    lambda name, attrs, ws: "<" + name + "".join(
+        f'{sep}{k}="{v}"' for sep, k, v in attrs) + ws + ">",
+    _TAG_NAMES, st.lists(_attr, max_size=3), st.sampled_from(["", " ", "\n"]))
+_end_tag = st.builds(lambda name, ws: f"</{name}{ws}>",
+                     _TAG_NAMES, st.sampled_from(["", " "]))
+_raw_unit = st.builds(
+    lambda open_, body, close: f"<{open_}>{body}</{close}>",
+    st.sampled_from(["script", "style", "SCRIPT", "Style"]),
+    st.one_of(st.text(alphabet="ab{}:; \n", max_size=10),
+              st.sampled_from(["<p>x", "a</b>", "<"])),
+    st.sampled_from(["script", "style", "Script", "STYLE"]))
+_soup_tokens = st.lists(st.one_of(_soup_text, _start_tag, _end_tag, _raw_unit),
+                        max_size=30)
+
+
+def _fed_blocks(payload):
+    """Text fields of the blocks HTMLParser's feed + close produce."""
+    p = _MainContentParser()
+    p.feed(payload)
+    p.close()
+    return [b[:3] for b in p.blocks]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_soup_tokens)
+def test_guarded_html_tokenizer_matches_htmlparser(tokens):
+    payload = "".join(tokens)
+    p = _MainContentParser()
+    if p.feed_guarded(payload):
+        assert [b[:3] for b in p.blocks] == _fed_blocks(payload)
+    else:
+        assert p.blocks == []
+
+
+@settings(max_examples=100, deadline=None)
+@given(_soup_tokens, st.sampled_from(["&", "&amp;", "<!-- c -->", "<br/>", "<?x?>",
+                                      "<!DOCTYPE html>"]),
+       st.integers(min_value=0))
+def test_guarded_html_tokenizer_falls_back(tokens, marker, at):
+    tokens.insert(at % (len(tokens) + 1), marker)
+    payload = "".join(tokens)
+    p = _MainContentParser()
+    assert not p.feed_guarded(payload)
+    assert p.blocks == []
+
+
+def test_guard_rejects_adversarial_input_in_linear_time():
+    # a guard that backtracks over the text run takes seconds on this;
+    # the possessive one rejects it in well under 1 ms
+    payload = "a " * 50000 + "<"
+    best = float("inf")
+    for _ in range(5):
+        t = time.perf_counter()
+        assert _HTML_GUARD_RE.fullmatch(payload) is None
+        best = min(best, time.perf_counter() - t)
+    assert best < 0.005

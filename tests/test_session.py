@@ -1,4 +1,5 @@
-"""The driver-heap default of session.get_spark, checked without a JVM."""
+"""The driver-heap and master defaults of session.get_spark, checked
+without a JVM."""
 
 import os
 
@@ -35,3 +36,14 @@ def test_large_host_is_capped_at_16g(monkeypatch):
 def test_env_override_is_returned_unchanged(monkeypatch, phys_gib):
     _host(monkeypatch, phys_gib * GIB, heap_env="3g")
     assert session.driver_memory() == "3g"
+
+
+def test_default_master_follows_spark_graft_cpus(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_master() == "local[3]"
+
+
+def test_default_master_without_env_uses_usable_cpus(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session.default_master() == "local[3]"
