@@ -428,12 +428,14 @@ def parse_layout(payload: str) -> tuple[list[dict], int]:
         if not m:
             failures += 1
             continue
-        bbox = coerce_bbox([float(m.group(i)) for i in range(1, 5)])
+        # the regex admits only numbers, so the four coordinates go
+        # straight to the clamp: coerce_bbox of four floats is a copy
+        g = m.groups()
         blocks.append({
-            "text": m.group(7).strip(),
-            "confidence": norm_conf(m.group(5)),
-            "bbox": clamp_bbox(bbox),
-            "source": m.group(6),
+            "text": g[6].strip(),
+            "confidence": norm_conf(g[4]),
+            "bbox": clamp_bbox([float(g[0]), float(g[1]), float(g[2]), float(g[3])]),
+            "source": g[5],
         })
     return blocks, failures
 

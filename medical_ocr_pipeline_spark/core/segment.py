@@ -6,6 +6,16 @@ Reference parity (notebooks/02a_segment_general.ipynb cell 0:28-100):
   - same_para (W3): vertical gap <= GAP_Y=18 and next block not a heading;
   - segment_page: new segment on heading or large gap; soft join with
     bullet-aware newlines (F13).
+
+Exact fast paths:
+  - segment_turn tests each block for a heading once.  A block that
+    reaches the paragraph test is not a heading, so of same_para only
+    the gap test is left to run there.
+  - is_heading answers False for ASCII text that is not str.isupper()
+    before building the letters string.  For ASCII the cased characters
+    are exactly A-Za-z, so the letters are upper iff the text is; a
+    non-ASCII text can hold cased letters outside A-Za-z, so it takes
+    the general test.
 """
 
 from __future__ import annotations
@@ -34,6 +44,8 @@ def is_heading(t: str) -> bool:
         return False
     if HEAD_RX.match(s):
         return True
+    if s.isascii() and not s.isupper():
+        return False
     letters = _NON_ALPHA.sub("", s)
     return 3 <= len(letters) <= 24 and letters.isupper()
 
@@ -60,7 +72,7 @@ def segment_turn(blocks: list[dict], join_soft: bool = True) -> list[dict]:
             continue
         if cur is None:
             cur = {"title": None, "items": [b], "bbox": list(b["bbox"])}
-        elif same_para(cur["items"][-1], b):
+        elif b["bbox"][1] - cur["items"][-1]["bbox"][3] <= SEGMENT_GAP_Y:
             cur["items"].append(b)
             x0, y0, x1, y1 = cur["bbox"]
             bx0, by0, bx1, by1 = b["bbox"]

@@ -11,6 +11,10 @@ Reference parity (notebooks/03_llm_cleanup.ipynb cell 5):
 
 The LLM itself is excluded per the north rule; the deterministic rules+
 dictionary+fuzzy output plays the cleaned-candidate role.
+
+Exact fast path: select_final takes a cleaned text equal to the original
+at once (its digits are the same and its length ratio is 1), which is
+the common case, without the digit scan.  It needs no ASCII gate.
 """
 
 from __future__ import annotations
@@ -72,6 +76,8 @@ def select_final(orig: str, cleaned: str) -> tuple[str, str]:
     otherwise keep the original.  Returns (label, text)."""
     if not cleaned or not cleaned.strip():
         return ("orig", orig)
+    if cleaned == orig:
+        return ("02a", cleaned)
     if digits_pattern(orig) != digits_pattern(cleaned):
         return ("orig", orig)
     len_ratio = (len(cleaned) + 1) / (len(orig) + 1)

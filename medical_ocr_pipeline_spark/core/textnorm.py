@@ -8,6 +8,22 @@ Reference parity:
   - seq similarity: notebooks/02_domain_cleanup.ipynb cell 0:90-91
   - digits fingerprint: notebooks/03_llm_cleanup.ipynb cell 5:13-14
   - lang tag: notebooks/03_llm_cleanup.ipynb cell 4:3-6
+
+Exact fast paths.  Each returns what the general path returns.  The
+cheap tests are gated on ASCII text, because only there do they agree
+with the regexes at every input:
+  - apply_rules skips the bullet/dash/x passes on ASCII text (none of
+    those characters is ASCII).  Its whitespace collapse needs no gate:
+    str.split splits on the same str.isspace set that \\s and
+    str.strip use.
+  - apply_dictionary returns early on ASCII text that holds no key as
+    a substring of its lowered form.  Non-ASCII text keeps the regex:
+    re.IGNORECASE folds U+017F, U+212A and U+0130 onto ASCII letters,
+    which a substring test cannot see.
+  - apply_fuzzy looks the lowered ASCII tokens up first and returns
+    early when none has a fix.  ASCII lower() keeps lengths and the
+    token class is case-symmetric, so the tokens and the order of memo
+    lookups are those of the general loop.
 """
 
 from __future__ import annotations
@@ -42,11 +58,12 @@ VOCAB = sorted(set(DICTIONARY.values()) | set(VOCAB_SEED))
 
 def apply_rules(text: str) -> str:
     """Unicode bullet/dash/× normalization + whitespace collapse + trim."""
-    t = _BULLET_RE.sub(".", text)
-    t = _DASH_RE.sub("-", t)
-    t = _MULT_RE.sub("x", t)
-    t = _WS_RE.sub(" ", t)
-    return t.strip()
+    t = text
+    if not t.isascii():
+        t = _BULLET_RE.sub(".", t)
+        t = _DASH_RE.sub("-", t)
+        t = _MULT_RE.sub("x", t)
+    return " ".join(t.split())
 
 
 def strip_markup(text: str) -> str:
@@ -60,10 +77,14 @@ def strip_markup(text: str) -> str:
 # compiled as ONE alternation so every block costs one regex pass — the
 # alternation order preserves longest-key-first precedence, and since no
 # replacement value is itself a dictionary key, the single pass is
-# equivalent to the reference's sequential per-key passes.
+# equivalent to the reference's sequential per-key passes.  Each key has
+# its own group, so the replacement comes from the key that matched:
+# re.IGNORECASE matches 'ſ' for 's' and 'İ' for 'i', so the lowered
+# match text need not be a key.
 _DICT_ITEMS = sorted(DICTIONARY.items(), key=lambda kv: (-len(kv[0]), kv[0]))
+_DICT_KEYS = tuple(k for k, _ in _DICT_ITEMS)
 _DICT_RE = re.compile(
-    r"\b(?:%s)\b" % "|".join(re.escape(k) for k, _ in _DICT_ITEMS),
+    r"\b(?:%s)\b" % "|".join("(%s)" % re.escape(k) for k in _DICT_KEYS),
     re.IGNORECASE,
 )
 
@@ -79,12 +100,16 @@ def _match_case(repl: str, src: str) -> str:
 
 def apply_dictionary(text: str) -> tuple[str, int]:
     """Word-boundary, case-aware dictionary correction. Returns (text, n)."""
+    if text.isascii():
+        low = text.lower()
+        if not any(k in low for k in _DICT_KEYS):
+            return text, 0
     n = 0
 
     def _sub(m):
         nonlocal n
         n += 1
-        return _match_case(DICTIONARY[m.group(0).lower()], m.group(0))
+        return _match_case(_DICT_ITEMS[m.lastindex - 1][1], m.group(0))
 
     text = _DICT_RE.sub(_sub, text)
     return text, n
@@ -98,6 +123,7 @@ def apply_dictionary(text: str) -> tuple[str, int]:
 # python workers from growing without limit.
 _FUZZY_MEMO: dict[tuple[str, float], str | None] = {}
 _FUZZY_MEMO_MAX = 262_144
+_MISS = object()
 
 
 def _fuzzy_lookup(low: str, cutoff: float) -> str | None:
@@ -127,6 +153,15 @@ def apply_fuzzy(text: str, cutoff: float = FUZZY_CUTOFF,
     DO_NOT_TOUCH, and exact vocab members.  Deterministic order: first
     occurrence in text.  Cap at max_corrections.
     """
+    if text.isascii():
+        for low in _FUZZY_TOKEN_RE.findall(text.lower()):
+            fix = _FUZZY_MEMO.get((low, cutoff), _MISS)
+            if fix is _MISS:
+                fix = _fuzzy_lookup(low, cutoff)
+            if fix is not None:
+                break
+        else:
+            return text, 0
     n = 0
     out: list[str] = []
     last = 0

@@ -2,18 +2,25 @@
 deterministic, and must respect basic invariants for ARBITRARY payloads
 (10^12 real-world turns contain everything)."""
 
+import re
 import time
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from medical_ocr_pipeline_spark.core import textnorm
 from medical_ocr_pipeline_spark.core.extract import extract_turn
+from medical_ocr_pipeline_spark.core.geometry import clamp_bbox, coerce_bbox, norm_conf
 from medical_ocr_pipeline_spark.core.parse import (
     _HTML_GUARD_RE,
+    _LAYOUT_LINE_RE,
     _MainContentParser,
     detect_variant,
+    parse_layout,
     parse_payload,
 )
+from medical_ocr_pipeline_spark.core.segment import _NON_ALPHA, HEAD_RX, is_heading
+from medical_ocr_pipeline_spark.core.select import digits_pattern, select_final
 from medical_ocr_pipeline_spark.core.textnorm import (
     apply_dictionary,
     apply_fuzzy,
@@ -208,3 +215,233 @@ def test_guard_rejects_adversarial_input_in_linear_time():
         assert _HTML_GUARD_RE.fullmatch(payload) is None
         best = min(best, time.perf_counter() - t)
     assert best < 0.005
+
+
+# --- cleanup-tail and layout-parse fast paths vs the general code ----------
+# Each reference below is the general code as it stood before its fast
+# path, kept verbatim; the dictionary reference is the notebook's
+# sequential per-key passes, which the single alternation reproduces.
+
+
+def _ref_apply_rules(text):
+    t = textnorm._BULLET_RE.sub(".", text)
+    t = textnorm._DASH_RE.sub("-", t)
+    t = textnorm._MULT_RE.sub("x", t)
+    t = textnorm._WS_RE.sub(" ", t)
+    return t.strip()
+
+
+def _ref_apply_dictionary_old(text):
+    n = 0
+
+    def _sub(m):
+        nonlocal n
+        n += 1
+        return textnorm._match_case(textnorm.DICTIONARY[m.group(0).lower()], m.group(0))
+
+    text = re.compile(
+        r"\b(?:%s)\b" % "|".join(re.escape(k) for k, _ in textnorm._DICT_ITEMS),
+        re.IGNORECASE,
+    ).sub(_sub, text)
+    return text, n
+
+
+def _ref_apply_dictionary_per_key(text):
+    n = 0
+    for key, repl in textnorm._DICT_ITEMS:
+        def _sub(m, repl=repl):
+            nonlocal n
+            n += 1
+            return textnorm._match_case(repl, m.group(0))
+
+        text = re.sub(r"\b%s\b" % re.escape(key), _sub, text, flags=re.IGNORECASE)
+    return text, n
+
+
+def _ref_apply_fuzzy(text, cutoff=textnorm.FUZZY_CUTOFF,
+                     max_corrections=textnorm.MAX_CORRECTIONS):
+    n = 0
+    out = []
+    last = 0
+    for m in textnorm._FUZZY_TOKEN_RE.finditer(text):
+        tok = m.group(0)
+        fix = textnorm._fuzzy_lookup(tok.lower(), cutoff)
+        if fix is not None and n < max_corrections:
+            out.append(text[last:m.start()])
+            out.append(textnorm._match_case(fix, tok))
+            last = m.end()
+            n += 1
+    out.append(text[last:])
+    return "".join(out), n
+
+
+def _ref_is_heading(t):
+    s = t.strip()
+    if len(s) <= 3:
+        return False
+    if HEAD_RX.match(s):
+        return True
+    letters = _NON_ALPHA.sub("", s)
+    return 3 <= len(letters) <= 24 and letters.isupper()
+
+
+def _ref_select_final(orig, cleaned):
+    if not cleaned or not cleaned.strip():
+        return ("orig", orig)
+    if digits_pattern(orig) != digits_pattern(cleaned):
+        return ("orig", orig)
+    len_ratio = (len(cleaned) + 1) / (len(orig) + 1)
+    if not 0.5 <= len_ratio <= 1.5:
+        return ("orig", orig)
+    return ("02a", cleaned)
+
+
+def _ref_parse_layout(payload):
+    blocks = []
+    failures = 0
+    for ln in payload.splitlines():
+        if not ln.strip():
+            continue
+        m = _LAYOUT_LINE_RE.match(ln)
+        if not m:
+            failures += 1
+            continue
+        bbox = coerce_bbox([float(m.group(i)) for i in range(1, 5)])
+        blocks.append({
+            "text": m.group(7).strip(),
+            "confidence": norm_conf(m.group(5)),
+            "bbox": clamp_bbox(bbox),
+            "source": m.group(6),
+        })
+    return blocks, failures
+
+
+# ASCII, the non-ASCII whitespace str.split and \s agree on, the mapped
+# bullet/dash/x characters and a few letters
+_rules_text = st.text(
+    alphabet=st.sampled_from(list("ab Z09.-x\t\n\r\x0b\x0c")
+                             + list("\x1c\x1d\x1e\x1f\x85\xa0　 ")
+                             + list("•·∙●–—−×✕✖é")),
+    max_size=60)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_rules_text)
+@example("\x1c\x1fa\x85b\xa0　")
+@example(" • a — b × c ")
+def test_apply_rules_matches_general_path(text):
+    assert apply_rules(text) == _ref_apply_rules(text)
+
+
+_keys = [k for k, _ in textnorm._DICT_ITEMS]
+_key_word = st.builds(
+    lambda k, flips: "".join(c.upper() if f else c for c, f in zip(k, flips)),
+    st.sampled_from(_keys), st.lists(st.booleans(), min_size=20, max_size=20))
+# case-folded spellings re.IGNORECASE still matches to the ASCII keys
+_folded_key = _key_word.map(
+    lambda w: w.replace("s", "ſ", 1).replace("k", "K", 1).replace("i", "İ", 1))
+_dict_text = st.lists(
+    st.one_of(_key_word, _folded_key,
+              st.sampled_from(["x", "_", "9", "ab", " ", ".", "-", "é", "\n"])),
+    max_size=12).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_dict_text)
+@example("Necroſls")
+@example("lnflammatİon and TUMOUR")
+@example("tumours tumour_ 9tumour Tumour.")
+def test_apply_dictionary_matches_general_path(text):
+    got = apply_dictionary(text)
+    assert got == _ref_apply_dictionary_per_key(text)
+    if text.isascii():
+        assert got == _ref_apply_dictionary_old(text)
+
+
+def _typo(word, i, c):
+    i %= len(word)
+    return word[:i] + c + word[i + 1:]
+
+
+_fuzzy_word = st.one_of(
+    st.sampled_from(textnorm.VOCAB),
+    st.builds(_typo, st.sampled_from(textnorm.VOCAB), st.integers(0, 30),
+              st.sampled_from(list("aelx1-"))),
+    st.sampled_from(["the", "with", "Kidney", "\u212aidney", "ſtroma", "é", "x-ray"]),
+)
+_fuzzy_text = st.lists(
+    st.one_of(_fuzzy_word.map(str.title), _fuzzy_word, _fuzzy_word.map(str.upper),
+              st.sampled_from([" ", ", ", "-", "9", "\n"])),
+    max_size=14).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_fuzzy_text, st.sampled_from([textnorm.FUZZY_CUTOFF, 0.6]),
+       st.sampled_from([textnorm.MAX_CORRECTIONS, 1]))
+@example("\u212aidney fibrosls Kidney", textnorm.FUZZY_CUTOFF, textnorm.MAX_CORRECTIONS)
+def test_apply_fuzzy_matches_general_path_and_memo(text, cutoff, cap):
+    # the memo must fill with the same keys in the same order
+    textnorm._FUZZY_MEMO.clear()
+    want = _ref_apply_fuzzy(text, cutoff, cap)
+    want_memo = list(textnorm._FUZZY_MEMO.items())
+    textnorm._FUZZY_MEMO.clear()
+    assert apply_fuzzy(text, cutoff, cap) == want
+    assert list(textnorm._FUZZY_MEMO.items()) == want_memo
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(
+    st.text(alphabet="ABCabcé EKG:-\t", max_size=30),
+    st.builds(lambda h, rest: h + rest,
+              st.sampled_from(["IMPRESSION", "Diagnosis", "plan", "Clinical details",
+                               "grossly", "  Comment"]),
+              st.text(alphabet="ABa :-é", max_size=10)),
+))
+@example("ABCé")
+@example("E K G")
+@example("EKG")
+@example("ÉCHO ABC")
+def test_is_heading_matches_general_path(text):
+    assert is_heading(text) == _ref_is_heading(text)
+
+
+_sel_text = st.text(alphabet="ab 1.2\t", max_size=12)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_sel_text, _sel_text, st.sampled_from(["equal", "padded", "free"]))
+@example("", "", "equal")
+@example("  ", "  ", "equal")
+@example("a 1", "", "free")
+@example("1", "xxxx", "padded")
+def test_select_final_matches_general_path(orig, cleaned, how):
+    if how == "equal":
+        cleaned = orig
+    elif how == "padded":
+        cleaned = orig + " " * len(cleaned)
+    assert select_final(orig, cleaned) == _ref_select_final(orig, cleaned)
+
+
+_coord = st.one_of(
+    st.integers(-2000, 3000).map(str),
+    st.floats(-2000, 3000, allow_nan=False).map(lambda v: f"{v:.2f}"),
+    st.sampled_from(["-0", "-0.0", "0", "0.0", "612", "792.5"]),
+)
+_conf = st.one_of(st.sampled_from(["1", "0.9", "95", "100.5", "-3", "0", "-0.0"]),
+                  st.floats(-5, 150, allow_nan=False).map(lambda v: f"{v:.3f}"))
+_layout_line = st.one_of(
+    st.builds(lambda c, conf, src, txt, lead: f"{lead}{c[0]},{c[1]},{c[2]},{c[3]},{conf},{src}|{txt}",
+              st.lists(_coord, min_size=4, max_size=4), _conf,
+              st.sampled_from(["ocr", "a_b-1"]), st.text(alphabet="ab |é\t", max_size=8),
+              st.sampled_from(["", "  ", "\t"])),
+    st.sampled_from(["", "  ", "1,2,3|x", "junk line", "1,2,3,4,5,|t"]),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_layout_line, max_size=8))
+@example(["10,20,5,8,95,ocr|x1 < x0", "-5,-0.0,9000,-1,1,ocr|off page"])
+def test_parse_layout_matches_general_path(lines):
+    payload = "\n".join(lines)
+    # repr tells 1 from 1.0 and -0.0 from 0.0
+    assert repr(parse_layout(payload)) == repr(_ref_parse_layout(payload))
